@@ -39,6 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from character_identification_spark.session import default_driver_memory
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
@@ -72,7 +74,7 @@ def _session(cores: int, app: str) -> SparkSession:
         # bigger Arrow batches amortize the per-batch numpy setup of the
         # vectorized string-similarity UDFs over the 10^7-pair stage
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -84,18 +84,16 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     checkpoint_every: int = 1,
-    converge_check_every: int = 1,
 ) -> DataFrame:
     """edges(u, v) → assignments(node, component) where component is the
     minimum node id in the component (ids may be longs or strings — only
     ordering and equality are used). Nodes that appear in no edge are
     absent (caller unions singletons; see attach_singletons).
 
-    ``converge_check_every`` > 1 skips the convergence-check job on
-    intermediate rounds. Round-6 default: check EVERY round — the check
-    is one keyed agg over the localCheckpointed (memory-resident) edge
-    set, far cheaper than a star round, so skipping checks buys nothing
-    and costs extra full rounds after convergence.
+    Convergence is checked EVERY round: the check is one keyed agg over
+    the localCheckpointed (memory-resident) edge set, far cheaper than a
+    star round, so skipping checks buys nothing and costs extra full
+    rounds after convergence.
 
     Convergence is detected STRUCTURALLY, not by comparing consecutive
     edge sets: the loop's terminal states are exactly the "stars rooted
@@ -115,8 +113,6 @@ def connected_components(
         cur = _small_star(_large_star(cur))
         if checkpoint_every and (i % checkpoint_every == 0):
             cur = cur.localCheckpoint(eager=True)
-        if (i + 1) % converge_check_every and i + 1 < max_iter:
-            continue
         ends = cur.select(
             F.explode(
                 F.array(

@@ -45,6 +45,15 @@ def bpe_ish_token_count(col) -> Column:
     return F.size(F.split(F.trim(pieces), r"\s+"))
 
 
+def _round6(c: Column) -> Column:
+    """Half-up at the sixth decimal of the double c·10⁶. Every step (×, +,
+    floor, ÷) is one IEEE double operation, so the DuckDB twin
+    (oracles._r6) is bit-identical; F.round would not be: it rounds the
+    double's shortest decimal string, DuckDB's round a scaled double, and
+    the two part at half-way values."""
+    return F.floor(c * 1e6 + 0.5) / 1e6
+
+
 def text_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -73,11 +82,11 @@ def text_stats(
         *[F.col(c) for c in keep],
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
-        F.round(avg_tok, 6).alias("avg_token_len"),
-        F.round(n_punct / n_chars.cast("double"), 6).alias("punct_ratio"),
-        F.round(n_digit / n_chars.cast("double"), 6).alias("digit_ratio"),
-        F.round(uniq_ratio, 6).alias("uniq_token_ratio"),
-        F.round(sw_ratio, 6).alias("stopword_ratio"),
+        _round6(avg_tok).alias("avg_token_len"),
+        _round6(n_punct / n_chars.cast("double")).alias("punct_ratio"),
+        _round6(n_digit / n_chars.cast("double")).alias("digit_ratio"),
+        _round6(uniq_ratio).alias("uniq_token_ratio"),
+        _round6(sw_ratio).alias("stopword_ratio"),
     )
     # blended quality in [0,1]: length band + low punct/digit + lexical
     # diversity + some stopword mass (C4-ish), each term clamped
@@ -88,7 +97,7 @@ def text_stats(
         + 0.15 * F.col("uniq_token_ratio")
         + 0.15 * F.least(F.col("stopword_ratio") * 5.0, F.lit(1.0))
     )
-    return stats.withColumn("quality", F.round(q, 6))
+    return stats.withColumn("quality", _round6(q))
 
 
 def language_id(

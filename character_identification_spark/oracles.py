@@ -731,35 +731,54 @@ FROM p WHERE cos_sim >= 0.4
 # Text analysis
 # --------------------------------------------------------------------------
 
-SQL_TEXT_STATS = r"""
+def _r6(expr: str) -> str:
+    """Half-up at the sixth decimal of the double expr·10⁶ — the twin of
+    textstats._round6, bit-identical in both engines."""
+    return f"floor(({expr}) * 1e6 + 0.5) / 1e6"
+
+
+_TS_RATIOS = {
+    "avg_token_len": "(n_chars - (n_tokens - 1)) / CAST(n_tokens AS DOUBLE)",
+    "punct_ratio": r"(n_chars - len(regexp_replace(text, '[^\w\s]', '', 'g')))"
+                   " / CAST(n_chars AS DOUBLE)",
+    "digit_ratio": "(n_chars - len(regexp_replace(text, '[0-9]', '', 'g')))"
+                   " / CAST(n_chars AS DOUBLE)",
+    "uniq_token_ratio": "len(list_distinct(toks)) / CAST(n_tokens AS DOUBLE)",
+    "stopword_ratio": "len(list_filter(toks, x -> list_contains("
+                      "['the','and','of','to','a','in','is','that','it','for'],"
+                      " lower(x)))) / CAST(n_tokens AS DOUBLE)",
+}
+_TS_QUALITY = _r6(
+    "0.25 * least(n_tokens / 50.0, 1.0)"
+    " + 0.25 * (1.0 - least(punct_ratio * 4.0, 1.0))"
+    " + 0.2 * (1.0 - least(digit_ratio * 4.0, 1.0))"
+    " + 0.15 * uniq_token_ratio"
+    " + 0.15 * least(stopword_ratio * 5.0, 1.0)"
+)
+
+
+def _text_stats_sql(docs: str) -> str:
+    """text_stats over the (doc_id, text) relation ``docs``."""
+    ratios = ",\n         ".join(f"{_r6(e)} AS {c}" for c, e in _TS_RATIOS.items())
+    return rf"""
 WITH t AS (
   SELECT doc_id, text,
          regexp_split_to_array(trim(text), '\s+') AS toks,
          CAST(len(text) AS INTEGER) AS n_chars,
          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER) AS n_tokens
-  FROM documents
+  FROM {docs}
 ),
 s AS (
   SELECT doc_id, n_chars, n_tokens,
-         round((n_chars - (n_tokens - 1)) / CAST(n_tokens AS DOUBLE), 6) AS avg_token_len,
-         round((n_chars - len(regexp_replace(text, '[^\w\s]', '', 'g')))
-               / CAST(n_chars AS DOUBLE), 6) AS punct_ratio,
-         round((n_chars - len(regexp_replace(text, '[0-9]', '', 'g')))
-               / CAST(n_chars AS DOUBLE), 6) AS digit_ratio,
-         round(len(list_distinct(toks)) / CAST(n_tokens AS DOUBLE), 6) AS uniq_token_ratio,
-         round(len(list_filter(toks, x -> list_contains(
-                 ['the','and','of','to','a','in','is','that','it','for'], lower(x))))
-               / CAST(n_tokens AS DOUBLE), 6) AS stopword_ratio
+         {ratios}
   FROM t
 )
-SELECT *,
-       round(0.25 * least(n_tokens / 50.0, 1.0)
-             + 0.25 * (1.0 - least(punct_ratio * 4.0, 1.0))
-             + 0.2 * (1.0 - least(digit_ratio * 4.0, 1.0))
-             + 0.15 * uniq_token_ratio
-             + 0.15 * least(stopword_ratio * 5.0, 1.0), 6) AS quality
+SELECT *, {_TS_QUALITY} AS quality
 FROM s
 """
+
+
+SQL_TEXT_STATS = _text_stats_sql("documents")
 
 _LANGS = {
     "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "auf", "mit", "zu"],
@@ -979,33 +998,8 @@ clusters AS (
   SELECT d.doc_id, coalesce(c.component, d.doc_id) AS dup_group
   FROM (SELECT doc_id FROM docs) d LEFT JOIN comp c ON d.doc_id = c.node
 ),
-tq0 AS (
-  SELECT doc_id, text,
-         regexp_split_to_array(trim(text), '\s+') AS toks,
-         CAST(len(text) AS INTEGER) AS n_chars,
-         CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER) AS n_tokens
-  FROM docs
-),
-tq1 AS (
-  SELECT doc_id, n_chars, n_tokens,
-         round((n_chars - len(regexp_replace(text, '[^\w\s]', '', 'g')))
-               / CAST(n_chars AS DOUBLE), 6) AS punct_ratio,
-         round((n_chars - len(regexp_replace(text, '[0-9]', '', 'g')))
-               / CAST(n_chars AS DOUBLE), 6) AS digit_ratio,
-         round(len(list_distinct(toks)) / CAST(n_tokens AS DOUBLE), 6) AS uniq_token_ratio,
-         round(len(list_filter(toks, x -> list_contains(
-                 ['the','and','of','to','a','in','is','that','it','for'], lower(x))))
-               / CAST(n_tokens AS DOUBLE), 6) AS stopword_ratio
-  FROM tq0
-),
 quality AS (
-  SELECT doc_id,
-         round(0.25 * least(n_tokens / 50.0, 1.0)
-               + 0.25 * (1.0 - least(punct_ratio * 4.0, 1.0))
-               + 0.2 * (1.0 - least(digit_ratio * 4.0, 1.0))
-               + 0.15 * uniq_token_ratio
-               + 0.15 * least(stopword_ratio * 5.0, 1.0), 6) AS quality
-  FROM tq1
+  SELECT doc_id, quality FROM (""" + _text_stats_sql("docs") + r""")
 )
 SELECT dup_group, keep_doc_id, quality, n_members FROM (
   SELECT cl.dup_group, cl.doc_id AS keep_doc_id, q.quality,

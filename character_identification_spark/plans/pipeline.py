@@ -31,6 +31,10 @@ Metrics (stage, rows, wall_s, inputs) and lineage (stage, partition_id,
 rows) append to ``_meta_metrics`` / ``_meta_lineage`` — the north rule's
 per-partition lineage + metrics tables, and the distributed analog of the
 reference's Timer logging (reference: python/util/__init__.py:5-28).
+Lineage is the writer's partitioning: one row per task that wrote the
+stage, its row count read from the committed part files' parquet footers
+(no scan of the table). The stage's ``rows`` is their sum. Both rows are
+written by the driver, so the only Spark job a stage runs is its write.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from character_identification_spark.evaluation.pairf1 import (
     gold_pairs_from_mentions,
@@ -82,34 +87,31 @@ class PipelineConfig:
     name_key_bits: int = 60
 
 
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("stage", T.StringType()),
+    T.StructField("partition_id", T.IntegerType()),
+    T.StructField("rows", T.LongType()),
+])
+METRICS_SCHEMA = T.StructType([
+    T.StructField("stage", T.StringType()),
+    T.StructField("rows", T.LongType()),
+    T.StructField("wall_s", T.DoubleType()),
+    T.StructField("inputs", T.StringType()),
+])
+
+
 def _run_stage(store: StageStore, name: str, inputs: list[str], build, cfg: PipelineConfig) -> DataFrame:
-    spark = store.spark
     if store.exists(name) and not cfg.force:
         return store.read(name)
     t0 = time.monotonic()
     df = build()
     store.write(df, name, tuple(cfg.partition_by.get(name, ())))
-    out = store.read(name)
-    # ONE scan of the committed table: the per-partition lineage aggregate
-    # is collected (tiny — one row per partition) and both the lineage
-    # table and the stage row count derive from it, instead of three
-    # separate scans (lineage write, count, downstream read all re-reading)
-    lin = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows")
-    ).collect()
+    lineage = store.lineage(name)
     wall = time.monotonic() - t0
-    lineage = spark.createDataFrame(
-        [(name, int(r["partition_id"]), int(r["rows"])) for r in lin],
-        "stage string, partition_id int, rows long",
-    )
-    store.append(lineage, "_meta_lineage")
-    n = sum(r["rows"] for r in lin)
-    metrics = spark.createDataFrame(
-        [(name, n, float(wall), ",".join(inputs))],
-        "stage string, rows long, wall_s double, inputs string",
-    )
-    store.append(metrics, "_meta_metrics")
-    return out
+    store.append_rows("_meta_lineage", [(name, p, n) for p, n in lineage], LINEAGE_SCHEMA)
+    rows = sum(n for _, n in lineage)
+    store.append_rows("_meta_metrics", [(name, rows, wall, ",".join(inputs))], METRICS_SCHEMA)
+    return store.read(name, df.schema)
 
 
 def run_pipeline(
@@ -207,9 +209,7 @@ def run_pipeline(
         ["edge_split", "names"],
         lambda: name_cluster_table(
             names,
-            connected_components(
-                edges, max_iter=cfg.cc_max_iter, converge_check_every=2
-            ),
+            connected_components(edges, max_iter=cfg.cc_max_iter),
             amb_links,
         ),
         cfg,

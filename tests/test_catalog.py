@@ -8,12 +8,16 @@ method of StageStore through duck-typed fakes that mimic the exact
 Spark surfaces the branch touches (catalog.tableExists, table, sql,
 DataFrame.writeTo → createOrReplace/append/create/partitionedBy), so
 the branch's call flow is executed and asserted rather than dead code.
+``lineage`` and ``append_rows`` run their Spark form here (an aggregate
+over the table, a createDataFrame append), where parquet mode reads
+footers and writes pyarrow files on the driver.
 On a real cluster the same calls hit Iceberg via
 ``spark.sql.catalog.<name>`` configs (see sources/catalog.py docstring).
 """
 
 from __future__ import annotations
 
+from character_identification_spark.plans.pipeline import LINEAGE_SCHEMA
 from character_identification_spark.sources.catalog import StageStore
 
 
@@ -52,6 +56,16 @@ class FakeDF:
     def writeTo(self, table):  # noqa: N802 — mimics the Spark surface
         return FakeWriter(_STORE, table, self)
 
+    # the lineage aggregate: every fake row sits in partition 0
+    def groupBy(self, *cols):  # noqa: N802
+        return self
+
+    def agg(self, *cols):
+        return FakeDF([{"partition_id": 0, "rows": len(self.rows)}])
+
+    def collect(self):
+        return list(self.rows)
+
 
 class FakeCatalog:
     def tableExists(self, name):  # noqa: N802
@@ -60,6 +74,10 @@ class FakeCatalog:
 
 class FakeSpark:
     catalog = FakeCatalog()
+
+    def createDataFrame(self, rows, schema):  # noqa: N802
+        assert schema is LINEAGE_SCHEMA
+        return FakeDF(list(rows))
 
     def table(self, name):
         return FakeDF(list(_STORE.tables[name]["rows"]))
@@ -91,16 +109,21 @@ def test_stage_store_catalog_branch_flow(spark):
     assert t["ops"] == ["createOrReplace"]
     assert any("block_key" in c for c in t["partitioned"])
 
-    # append on a MISSING table must create, not blow up
-    store.append(FakeDF([3]), "lineage")
-    assert _STORE.tables["ice.lineage"]["ops"] == ["create"]
-    # append on an existing table appends
-    store.append(FakeDF([4]), "lineage")
-    assert _STORE.tables["ice.lineage"]["ops"] == ["create", "append"]
-    assert _STORE.tables["ice.lineage"]["rows"] == [3, 4]
+    # lineage is one Spark aggregate over the committed table
+    assert store.lineage("mentions") == [(0, 2)]
 
-    # read round-trips through spark.table
+    # append_rows on a MISSING table must create, not blow up
+    store.append_rows("lineage", [("mentions", 0, 2)], LINEAGE_SCHEMA)
+    assert _STORE.tables["ice.lineage"]["ops"] == ["create"]
+    # append_rows on an existing table appends
+    store.append_rows("lineage", [("names", 0, 4)], LINEAGE_SCHEMA)
+    assert _STORE.tables["ice.lineage"]["ops"] == ["create", "append"]
+    assert _STORE.tables["ice.lineage"]["rows"] == [("mentions", 0, 2), ("names", 0, 4)]
+
+    # read round-trips through spark.table; a schema is for the parquet
+    # reader only
     assert store.read("mentions").rows == [1, 2]
+    assert store.read("mentions", LINEAGE_SCHEMA).rows == [1, 2]
 
     # delete issues DROP TABLE IF EXISTS and exists() flips
     store.delete("mentions")

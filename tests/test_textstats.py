@@ -43,6 +43,40 @@ def test_text_stats_values(spark):
     assert 0.0 <= row["quality"] <= 1.0
 
 
+# document 69 of the seeded contract tables at seed 314: its quality lands
+# on a half-way sixth decimal, where Spark's F.round (0.862328) and DuckDB's
+# round (0.862329) used to part
+_HALF_WAY_DOC = (
+    "part part vector row the scan stream big row the part small agg the line "
+    "slow order the big column spark a group a a window the spark value slow "
+    "merge batch key scan fast agg order row big join vector row line fast "
+    "batch line fast data sort scan sort small customer filter hash key big "
+    "join column the fast row small query vector data customer row scan "
+    "window the vector line"
+)
+
+
+def test_text_stats_rounding_matches_oracle_at_half_way(spark):
+    import duckdb
+
+    from character_identification_spark.oracles import SQL_TEXT_STATS
+
+    docs = spark.createDataFrame([(69, _HALF_WAY_DOC)], "doc_id long, text string")
+    got = text_stats(docs).collect()[0].asDict()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE TABLE documents AS SELECT 69::BIGINT AS doc_id, ?::VARCHAR AS text",
+            [_HALF_WAY_DOC],
+        )
+        rel = con.sql(SQL_TEXT_STATS)
+        want = dict(zip(rel.columns, rel.fetchone()))
+    finally:
+        con.close()
+    assert got == want
+    assert got["quality"] == 0.862329
+
+
 def test_language_id(spark):
     df = spark.createDataFrame(
         [

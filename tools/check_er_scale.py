@@ -89,6 +89,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from character_identification_spark import oracles
+    from character_identification_spark.session import default_driver_memory
     from character_identification_spark.driver_contract import (
         q_er_clusters,
         q_er_entities,
@@ -148,7 +149,7 @@ def main() -> None:
         .appName("check-er-scale")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", default_driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

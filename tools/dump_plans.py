@@ -16,6 +16,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from pyspark.sql import SparkSession
 
+from character_identification_spark.session import default_driver_memory
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 OUT_DIR = os.path.join(
@@ -34,7 +36,7 @@ def main() -> None:
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
