@@ -89,11 +89,11 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from character_identification_spark import oracles
-    from character_identification_spark.session import default_driver_memory
     from character_identification_spark.driver_contract import (
         q_er_clusters,
         q_er_entities,
     )
+    from character_identification_spark.session import default_driver_memory
 
     argv = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
